@@ -8,8 +8,8 @@ anomaly/drift detection) as an idiomatic PySpark engine:
 * column statistics, uniqueness and referential constraints as pure
   DataFrame aggregations / broadcast anti-joins (Catalyst-optimized),
 * distribution-drift detection via per-partition Random Cut Forest
-  sketches implemented in vectorized NumPy inside Arrow ``applyInPandas``
-  UDFs (tree state = flat arrays, no per-row Python),
+  sketches implemented in vectorized NumPy inside an Arrow grouped map
+  (``applyInArrow``; tree state = flat arrays, no per-row Python),
 * per-partition pass/fail verdicts + violation rows, resumable from
   checkpointed forest state, with lineage/metrics tables.
 

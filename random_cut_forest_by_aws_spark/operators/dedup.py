@@ -23,13 +23,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 
-def exact_duplicates(df: DataFrame, cols: Sequence[str], salt_buckets: int = 64) -> DataFrame:
+def exact_duplicates(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """Groups of rows identical on ``cols``: (cols…, dup_count). Same
     single count aggregate as uniqueness (map-side partials absorb
     hot keys; one exchange)."""
     from .uniqueness import uniqueness_violations
 
-    return uniqueness_violations(df, list(cols), salt_buckets=salt_buckets)
+    return uniqueness_violations(df, list(cols))
 
 
 def word_shingles(text_col: str = "text", k: int = 3) -> Column:

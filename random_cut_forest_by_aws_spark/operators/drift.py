@@ -1,13 +1,15 @@
 """Distribution-drift operator (north_rule item c).
 
 Runs a Random Cut Forest sketch per ``(group, bucket)`` partition inside
-one Arrow ``applyInPandas`` grouped-map UDF — the Spark-idiomatic
+one Arrow grouped map (``applyInArrow``) — the Spark-idiomatic
 re-expression of the reference's ThresholdedRandomCutForest pipeline
 (``parkservices/ThresholdedRandomCutForest.java:234-277``: preprocess →
-score → threshold → update):
+score → threshold → update). ``drift_group`` is the Spark-free per-group
+core; ``drift_scores`` only plans the buckets and adapts Arrow to it:
 
-* feature columns are computed JVM-side (`functions.token_features`), so
-  the UDF receives a ready float matrix via Arrow — no per-row Python;
+* feature columns are computed JVM-side (`functions.token_features`); the
+  array column crosses the boundary as-is and the core receives its flat
+  child values as a float matrix — no per-row Python;
 * per-partition streaming NORMALIZE transform (discounted per-dim
   mean/dev, ``preprocessor/Preprocessor.java:807-820``) applied in
   closed-form per chunk;
@@ -33,6 +35,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import tempfile
 from dataclasses import dataclass, field, replace
 
 import numpy as np
@@ -43,6 +46,14 @@ from ..core.forest import RCFForest
 from ..core.thresholder import BasicThresholder, Deviation
 
 SUMMARY_SEQ = -1
+# drift_scores' result columns after the group key and order_col, with
+# their Spark types; drift_group returns them keyed by name (plus ``seq``)
+_RESULT_COLS = (
+    ("score", "double"), ("threshold", "double"), ("grade", "double"),
+    ("row_kind", "string"), ("n_rows", "long"), ("n_scored", "long"),
+    ("n_anomalous", "long"), ("n_windows", "long"), ("n_drifted_windows", "long"),
+    ("n_imputed", "long"), ("mean_score", "double"),
+)
 
 
 @dataclass
@@ -53,16 +64,13 @@ class DriftConfig:
     seed: int = 42
     chunk_size: int = 4096
     z_factor: float = 3.0  # per-row thresholder (violation rows)
-    normalize: bool = True
     norm_discount: float = 0.0  # cumulative stats ⇒ stable baseline coords
     clip_factor: float = 100.0
     # TransformMethod parity (config/TransformMethod.java): 'none',
     # 'normalize', 'difference', 'normalize_difference', 'weighted'
     # (WeightedTransformer.java:44,174), 'subtract_ma'
     # (SubtractMATransformer.java — discounted moving average removed).
-    # ``normalize`` above is kept for back-compat and means 'normalize'
-    # when True.
-    transform: str | None = None
+    transform: str = "normalize"
     transform_weights: tuple | None = None  # WEIGHTED: per-dim multipliers
     # ForestMode parity (config/ForestMode.java): 'standard',
     # 'time_augmented' (the order_col gap appended as an extra feature
@@ -134,14 +142,13 @@ class DriftConfig:
     rows_per_bucket: int = 25_000
     max_buckets: int = 4096
     checkpoint_dir: str | None = None
-    feature_dim: int = 4
     extra: dict = field(default_factory=dict)
 
 
 def _resolve_transform(cfg: "DriftConfig", d: int) -> dict:
     """TransformMethod resolution shared by the batch and streaming
     operators (they previously diverged — normalize-only streaming)."""
-    method = cfg.transform or ("normalize" if cfg.normalize else "none")
+    method = cfg.transform
     do_norm = method in ("normalize", "normalize_difference")
     do_sub = method == "subtract_ma"
     return {
@@ -187,6 +194,32 @@ def _transform_chunk(
         updated = True
     xn = norm.transform(base) if tf["do_stat"] else base.astype(np.float32)
     return base, real, xn, raw_last, updated
+
+
+def _shingle(
+    tail: np.ndarray, xn: np.ndarray, s: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """ShingleBuilder over one chunk of transformed rows, shared by the
+    batch and streaming operators: forest points are windows of the last
+    ``s`` rows, with ``tail`` (the previous s−1 rows) carried across chunk
+    and micro-batch boundaries. Rows before the first full shingle (stream
+    start) are consumed without a point (warm-up). Returns (pts, row_map,
+    new_tail); ``row_map[i]`` is the chunk row that completes ``pts[i]``."""
+    if s <= 1:
+        return xn, np.arange(len(xn), dtype=np.int64), tail
+    cat = np.vstack([tail, xn]) if len(tail) else xn
+    if len(cat) >= s:
+        pts = np.ascontiguousarray(
+            np.lib.stride_tricks.sliding_window_view(cat, (s, cat.shape[1]))[
+                :, 0
+            ].reshape(-1, s * cat.shape[1]),
+            np.float32,
+        )
+        row_map = np.arange(len(pts), dtype=np.int64) + (s - 1 - len(tail))
+    else:
+        pts = np.zeros((0, s * cat.shape[1]), np.float32)
+        row_map = np.zeros(0, np.int64)
+    return pts, row_map, cat[max(0, len(cat) - (s - 1)):].copy()
 
 
 def _group_seed(key: tuple, seed: int) -> int:
@@ -387,17 +420,9 @@ def _state_dict(
     state["rng_hi2"] = np.array([(s >> 128) & ((1 << 64) - 1) for s, _ in rs], np.uint64)
     state["inc_lo"] = np.array([i & ((1 << 64) - 1) for _, i in rs], np.uint64)
     state["inc_hi"] = np.array([(i >> 64) & ((1 << 64) - 1) for _, i in rs], np.uint64)
-    th_state = th.to_state()
-    state["th_primary"] = np.array(th_state["primary"])
-    state["th_secondary"] = np.array(th_state["secondary"])
-    state["th_threshold_dev"] = np.array(th_state["threshold_dev"])
-    state["th_params"] = np.array(th_state["params"])
-    if th2 is not None:  # secondary (distance-mode) thresholder
-        t2 = th2.to_state()
-        state["th2_primary"] = np.array(t2["primary"])
-        state["th2_secondary"] = np.array(t2["secondary"])
-        state["th2_threshold_dev"] = np.array(t2["threshold_dev"])
-        state["th2_params"] = np.array(t2["params"])
+    for prefix, t in (("th", th), ("th2", th2)):  # th2: distance-mode thresholder
+        if t is not None:
+            state.update({f"{prefix}_{k}": np.array(v) for k, v in t.to_state().items()})
     state.update(norm.to_state())
     if corrector is not None and getattr(corrector, "auto_adjust", False):
         state.update(corrector.aa_state())
@@ -445,11 +470,20 @@ def _state_dict(
 
 
 def _write_group_state(path: str, state: dict) -> None:
-    tmp = path + ".tmp"
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    with open(tmp, "wb") as fh:
-        np.savez_compressed(fh, **state)
-    os.replace(tmp, path)  # atomic: readers never see partial state
+    """Publish ``state`` atomically: every writer (a task attempt, its
+    speculative copy or a zombie retry) fills its own temp file and then
+    ``os.replace``s it over ``path``, so readers never see partial state
+    and concurrent writers never share an inode."""
+    ckpt_dir, name = os.path.split(path)
+    os.makedirs(ckpt_dir, exist_ok=True)
+    fd, tmp = tempfile.mkstemp(dir=ckpt_dir, prefix=name + ".", suffix=".tmp")
+    try:
+        with os.fdopen(fd, "wb") as fh:
+            np.savez_compressed(fh, **state)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):  # the write failed before the replace
+            os.unlink(tmp)
 
 
 def _load_group_state(path_or_file):
@@ -465,14 +499,12 @@ def _load_group_state(path_or_file):
         rng_state.append((s, inc))
     state["rng_state"] = np.array(rng_state, dtype=object)
     forest = RCFForest.from_state(state)
-    th = BasicThresholder.from_state(
-        {
-            "primary": state["th_primary"],
-            "secondary": state["th_secondary"],
-            "threshold_dev": state["th_threshold_dev"],
-            "params": state["th_params"],
-        }
-    )
+
+    def thresholder(prefix: str) -> BasicThresholder:
+        parts = ("primary", "secondary", "threshold_dev", "params")
+        return BasicThresholder.from_state({k: state[f"{prefix}_{k}"] for k in parts})
+
+    th = thresholder("th")
     extras = {
         "last_seq": int(state["extras"][0]),
         "n_rows": int(state["extras"][1]),
@@ -503,538 +535,512 @@ def _load_group_state(path_or_file):
         if len(state["extras_sh"]) > 2:
             extras["rc_last_seq"] = int(state["extras_sh"][2])
     if "th2_params" in state:
-        extras["th2"] = BasicThresholder.from_state(
-            {
-                "primary": state["th2_primary"],
-                "secondary": state["th2_secondary"],
-                "threshold_dev": state["th2_threshold_dev"],
-                "params": state["th2_params"],
-            }
-        )
+        extras["th2"] = thresholder("th2")
     return forest, th, state, extras
 
 
-def _make_drift_fn(group_cols: list[str], order_col: str, feature_col: str, cfg: DriftConfig):
-    """Build the grouped-map function (pickled to executors)."""
+def drift_group(
+    key: tuple,
+    seqs: np.ndarray,
+    X: np.ndarray,
+    cfg: DriftConfig,
+    anchor: tuple[int, np.ndarray] | None = None,
+) -> dict:
+    """Drift sketch of one ``(group…, bucket)`` partition: the Spark-free
+    core of ``drift_scores``. Rows of ``X`` (float64[n, d]) are processed in
+    stable ``seqs`` (int64[n]) order; ``key`` (plain Python values) seeds
+    the forest and names the checkpoint. ``anchor`` is the previous range
+    block's last real ``(seq, features)`` row, so gap-fill and dt across
+    block boundaries match the single-stream run. Returns the columns
+    ``seq`` + ``_RESULT_COLS``: anomaly rows, drifted-window rows and one
+    summary row."""
+    import time as _time
 
-    out_cols = group_cols + [
-        order_col, "score", "threshold", "grade", "row_kind",
-        "n_rows", "n_scored", "n_anomalous", "n_windows",
-        "n_drifted_windows", "n_imputed", "mean_score",
-    ]
+    # per-phase wall profiling (SPARK_GRAFT_DRIFT_PROFILE=<dir>): each
+    # task appends one JSON of accumulated phase seconds — the
+    # feedback loop for "where do drift's seconds go" (aggregated by
+    # scripts/profile_drift.py). Zero overhead when unset.
+    prof_dir = os.environ.get("SPARK_GRAFT_DRIFT_PROFILE")
+    prof: dict | None = {} if prof_dir else None
 
-    def _row_features(row) -> np.ndarray:
-        """Feature vector of one pandas row — array column or the
-        scalarized ``__feat{j}`` columns (see drift_scores)."""
-        if feature_col in row.index:
-            return np.asarray(row[feature_col], np.float64)
-        j = 0
-        out = []
-        while f"__feat{j}" in row.index:
-            out.append(float(row[f"__feat{j}"]))
-            j += 1
-        return np.asarray(out, np.float64)
+    def _acc(name: str, t0: float) -> None:
+        prof[name] = prof.get(name, 0.0) + (_time.perf_counter() - t0)
 
-    def fn(key, pdf):
-        import time as _time
+    t_all = _time.perf_counter() if prof is not None else 0.0
+    order = np.argsort(seqs, kind="stable")
+    seqs = np.asarray(seqs, np.int64)[order]
+    X = np.asarray(X, np.float64)[order]
+    if cfg.mode == "time_augmented" and len(X):
+        # ForestMode.TIME_AUGMENTED: the order_col gap becomes an extra
+        # feature dimension (Preprocessor.java:53-90) — cadence shifts
+        # in irregular streams then register as anomalies/drift. In
+        # range-blocked execution the first row's dt comes from the
+        # previous block's last seq (the anchor row), so block
+        # boundaries measure the stream's real cadence.
+        prepend = seqs[0] - cfg.expected_step
+        if anchor is not None:
+            prepend = anchor[0]
+        dt = np.diff(seqs, prepend=prepend).astype(np.float64)
+        X = np.column_stack([X, dt])
+    d = X.shape[1]
+    imputed = np.zeros(len(X), bool)
 
-        import pandas as pd
+    tf = _resolve_transform(cfg, d)
+    do_norm, do_stat, do_sub = tf["do_norm"], tf["do_stat"], tf["do_sub"]
 
-        # per-phase wall profiling (SPARK_GRAFT_DRIFT_PROFILE=<dir>): each
-        # task appends one JSON of accumulated phase seconds — the
-        # feedback loop for "where do drift's seconds go" (aggregated by
-        # scripts/profile_drift.py). Zero overhead when unset.
-        prof_dir = os.environ.get("SPARK_GRAFT_DRIFT_PROFILE")
-        prof: dict | None = {} if prof_dir else None
-
-        def _acc(name: str, t0: float) -> None:
-            prof[name] = prof.get(name, 0.0) + (_time.perf_counter() - t0)
-
-        t_all = _time.perf_counter() if prof is not None else 0.0
-        pdf = pdf.sort_values(order_col, kind="mergesort")
-        # range-blocked STREAMING_IMPUTE: the previous non-empty block's
-        # last (seq, features) row travels with this block as a marked
-        # anchor row — gap-fill across the block boundary then matches the
-        # single-stream run exactly (same grid points, same fill values)
-        block_anchor: tuple[int, np.ndarray] | None = None
-        if "__anchor" in pdf.columns:
-            amask = pdf["__anchor"].to_numpy() == 1
-            if amask.any():
-                anc = pdf[amask].iloc[-1]
-                block_anchor = (
-                    int(anc[order_col]),
-                    _row_features(anc),
-                )
-                pdf = pdf[~amask]
-            if len(pdf) == 0:
-                return pd.DataFrame([], columns=out_cols)
-        if feature_col in pdf.columns:
-            X = np.stack(pdf[feature_col].to_numpy()).astype(np.float64)
-        else:
-            # scalarized features (drift_scores projects the array to
-            # __feat{j} float columns before the exchange): each column
-            # arrives as one contiguous Arrow float vector — no per-row
-            # ndarray objects to build, ~2x less grouped-map overhead
-            # (round-6 A/B: 5.1 -> 2.7 s trivial-fn wall at 2M rows)
-            fcols = []
-            j = 0
-            while f"__feat{j}" in pdf.columns:
-                fcols.append(f"__feat{j}")
-                j += 1
-            X = np.empty((len(pdf), len(fcols)), np.float64)
-            for jj, c in enumerate(fcols):
-                X[:, jj] = pdf[c].to_numpy(np.float64)
-        seqs = pdf[order_col].to_numpy(np.int64)
-        if cfg.mode == "time_augmented" and len(X):
-            # ForestMode.TIME_AUGMENTED: the order_col gap becomes an extra
-            # feature dimension (Preprocessor.java:53-90) — cadence shifts
-            # in irregular streams then register as anomalies/drift. In
-            # range-blocked execution the first row's dt comes from the
-            # previous block's last seq (the anchor row), so block
-            # boundaries measure the stream's real cadence.
-            prepend = seqs[0] - cfg.expected_step
-            if block_anchor is not None:
-                prepend = block_anchor[0]
-            dt = np.diff(seqs, prepend=prepend).astype(np.float64)
-            X = np.column_stack([X, dt])
-        d = X.shape[1]
+    ckpt = (
+        _checkpoint_path(cfg.checkpoint_dir, tuple(key)) if cfg.checkpoint_dir else None
+    )
+    extras = {
+        "last_seq": -1, "n_rows": 0, "n_scored": 0, "n_anomalous": 0,
+        "n_windows": 0, "n_drifted_windows": 0, "n_imputed": 0,
+        "run_seq": -1, "run_attrib": None,
+        "score_sum": 0.0, "win_sum": 0.0, "win_cnt": 0.0, "imp_ema": 0.0,
+        "baseline": Deviation(cfg.baseline_discount),
+    }
+    norm = _Normalizer(
+        d, cfg.norm_discount if do_stat else 0.0, cfg.clip_factor, mean_only=do_sub
+    )
+    emit_wm = -1  # emit only rows with seq > emit_wm
+    n_buf = 0
+    ckpt_raw = None
+    if ckpt and os.path.exists(ckpt):
+        forest, th, raw, extras = _load_group_state(ckpt)
+        ckpt_raw = raw
+        norm.load_state(raw)
+        emit_wm = extras["last_seq"]
+        keep = seqs > emit_wm  # resume: drop rows already processed…
+        X, seqs = X[keep], seqs[keep]
         imputed = np.zeros(len(X), bool)
-
-        tf = _resolve_transform(cfg, d)
-        do_norm, do_stat, do_sub = tf["do_norm"], tf["do_stat"], tf["do_sub"]
-
-        ckpt = (
-            _checkpoint_path(cfg.checkpoint_dir, tuple(key)) if cfg.checkpoint_dir else None
-        )
-        extras = {
-            "last_seq": -1, "n_rows": 0, "n_scored": 0, "n_anomalous": 0,
-            "n_windows": 0, "n_drifted_windows": 0, "n_imputed": 0,
-            "run_seq": -1, "run_attrib": None,
-            "score_sum": 0.0, "win_sum": 0.0, "win_cnt": 0.0, "imp_ema": 0.0,
-            "baseline": Deviation(cfg.baseline_discount),
-        }
-        norm = _Normalizer(
-            d, cfg.norm_discount if do_stat else 0.0, cfg.clip_factor, mean_only=do_sub
-        )
-        emit_wm = -1  # emit only rows with seq > emit_wm
-        n_buf = 0
-        ckpt_raw = None
-        if ckpt and os.path.exists(ckpt):
-            forest, th, raw, extras = _load_group_state(ckpt)
-            ckpt_raw = raw
-            norm.load_state(raw)
-            emit_wm = extras["last_seq"]
-            keep = seqs > emit_wm  # resume: drop rows already processed…
-            X, seqs = X[keep], seqs[keep]
-            imputed = np.zeros(len(X), bool)
-            if len(raw["buf_seqs"]):  # …but replay the post-boundary tail
-                n_buf = len(raw["buf_seqs"])
-                X = np.vstack([raw["buf_X"], X]) if len(X) else raw["buf_X"]
-                seqs = np.concatenate([raw["buf_seqs"], seqs])
-                buf_imp = (
-                    raw["buf_imp"].astype(bool)
-                    if "buf_imp" in raw
-                    else np.zeros(n_buf, bool)
-                )
-                imputed = np.concatenate([buf_imp, np.zeros(len(X) - n_buf, bool)])
-        else:
-            forest = RCFForest(
-                d * max(1, cfg.shingle_size),
-                num_trees=cfg.num_trees,
-                sample_size=cfg.sample_size,
-                time_decay=cfg.time_decay,
-                seed=_group_seed(tuple(key), cfg.seed),
+        if len(raw["buf_seqs"]):  # …but replay the post-boundary tail
+            n_buf = len(raw["buf_seqs"])
+            X = np.vstack([raw["buf_X"], X]) if len(X) else raw["buf_X"]
+            seqs = np.concatenate([raw["buf_seqs"], seqs])
+            buf_imp = (
+                raw["buf_imp"].astype(bool)
+                if "buf_imp" in raw
+                else np.zeros(n_buf, bool)
             )
-            th = BasicThresholder(z_factor=cfg.z_factor)
+            imputed = np.concatenate([buf_imp, np.zeros(len(X) - n_buf, bool)])
+    else:
+        forest = RCFForest(
+            d * max(1, cfg.shingle_size),
+            num_trees=cfg.num_trees,
+            sample_size=cfg.sample_size,
+            time_decay=cfg.time_decay,
+            seed=_group_seed(tuple(key), cfg.seed),
+        )
+        th = BasicThresholder(z_factor=cfg.z_factor)
 
-        if "tlast" not in extras:
-            extras["tlast"] = np.full(d, np.nan)
-        s_sh = max(1, cfg.shingle_size)
-        if "sh_tail" not in extras:
-            extras["sh_tail"] = np.zeros((0, d), np.float32)
-        th2 = extras.pop("th2", None)
-        if cfg.scoring in ("multi_mode", "multi_mode_recall") and th2 is None:
-            th2 = BasicThresholder(z_factor=cfg.z_factor)
+    if "tlast" not in extras:
+        extras["tlast"] = np.full(d, np.nan)
+    s_sh = max(1, cfg.shingle_size)
+    if "sh_tail" not in extras:
+        extras["sh_tail"] = np.zeros((0, d), np.float32)
+    th2 = extras.pop("th2", None)
+    if cfg.scoring in ("multi_mode", "multi_mode_recall") and th2 is None:
+        th2 = BasicThresholder(z_factor=cfg.z_factor)
 
-        if cfg.mode == "time_augmented" and emit_wm >= 0 and len(X) > n_buf:
-            # boundary dt across a resume: the first kept row's predecessor
-            # is the last buffered row, or — when the caller feeds only new
-            # rows — the last processed seq (emit_wm). With a full-history
-            # re-feed this equals the dt already computed, so it is a no-op
-            # there and a fix only for incremental feeds.
-            prev = int(seqs[n_buf - 1]) if n_buf > 0 else emit_wm
-            X[n_buf, -1] = float(seqs[n_buf] - prev)
+    if cfg.mode == "time_augmented" and emit_wm >= 0 and len(X) > n_buf:
+        # boundary dt across a resume: the first kept row's predecessor
+        # is the last buffered row, or — when the caller feeds only new
+        # rows — the last processed seq (emit_wm). With a full-history
+        # re-feed this equals the dt already computed, so it is a no-op
+        # there and a fix only for incremental feeds.
+        prev = int(seqs[n_buf - 1]) if n_buf > 0 else emit_wm
+        X[n_buf, -1] = float(seqs[n_buf] - prev)
 
-        if cfg.mode == "streaming_impute" and len(X):
-            # fill grid gaps from the buffer's end onward (earlier rows are
-            # a replayed tail whose gaps the previous run already filled);
-            # across an empty-buffer resume the anchor is the last processed
-            # (seq, value) so the leading gap fills exactly as an
-            # uninterrupted run would.
-            tl = extras["tlast"]
-            anchor_x = None if np.isnan(tl).any() else np.asarray(tl, np.float64)
-            anchor_seq = emit_wm if (emit_wm >= 0 and n_buf == 0) else None
-            if anchor_seq is None and n_buf == 0 and emit_wm < 0 and block_anchor:
-                # fresh run of a range block: anchor the grid at the
-                # previous block's last real row (checkpoint state wins
-                # when present — it already encodes the same anchor)
-                anchor_seq, anchor_x = block_anchor
-            X, seqs, imputed = _gap_fill(
-                X, seqs, imputed, anchor_seq, anchor_x, n_buf, cfg
+    if cfg.mode == "streaming_impute" and len(X):
+        # fill grid gaps from the buffer's end onward (earlier rows are
+        # a replayed tail whose gaps the previous run already filled);
+        # across an empty-buffer resume the anchor is the last processed
+        # (seq, value) so the leading gap fills exactly as an
+        # uninterrupted run would.
+        tl = extras["tlast"]
+        anchor_x = None if np.isnan(tl).any() else np.asarray(tl, np.float64)
+        anchor_seq = emit_wm if (emit_wm >= 0 and n_buf == 0) else None
+        if anchor_seq is None and n_buf == 0 and emit_wm < 0 and anchor:
+            # fresh run of a range block: anchor the grid at the
+            # previous block's last real row (checkpoint state wins
+            # when present — it already encodes the same anchor)
+            anchor_seq, anchor_x = anchor
+        X, seqs, imputed = _gap_fill(
+            X, seqs, imputed, anchor_seq, anchor_x, n_buf, cfg
+        )
+
+    baseline = extras["baseline"]
+    anomalies: list[tuple] = []  # confident per-row violations
+    windows: list[tuple] = []  # drifted windows (the verdict signal)
+    corrector = None
+    # the expected-point corrector re-scores with inverse depth; its
+    # threshold comparison is scale-mismatched against pure DISTANCE
+    # thresholds, so it only runs for inverse-depth-graded strategies
+    if cfg.use_corrector and cfg.scoring != "distance":
+        from ..core.corrector import PredictorCorrector
+
+        corrector = PredictorCorrector(auto_adjust=cfg.auto_adjust)
+        if cfg.auto_adjust and ckpt_raw is not None:
+            corrector.load_aa_state(ckpt_raw)
+
+    def close_window(end_seq: int) -> None:
+        win_mean = extras["win_sum"] / extras["win_cnt"]
+        extras["n_windows"] += 1
+        if baseline.count >= cfg.min_baseline_windows:
+            dev = max(
+                baseline.deviation, cfg.dev_floor_frac * abs(baseline.mean), 1e-9
             )
-
-        baseline = extras["baseline"]
-        anomalies: list[tuple] = []  # confident per-row violations
-        windows: list[tuple] = []  # drifted windows (the verdict signal)
-        corrector = None
-        # the expected-point corrector re-scores with inverse depth; its
-        # threshold comparison is scale-mismatched against pure DISTANCE
-        # thresholds, so it only runs for inverse-depth-graded strategies
-        if cfg.use_corrector and cfg.scoring != "distance":
-            from ..core.corrector import PredictorCorrector
-
-            corrector = PredictorCorrector(auto_adjust=cfg.auto_adjust)
-            if cfg.auto_adjust and ckpt_raw is not None:
-                corrector.load_aa_state(ckpt_raw)
-
-        def close_window(end_seq: int) -> None:
-            win_mean = extras["win_sum"] / extras["win_cnt"]
-            extras["n_windows"] += 1
-            if baseline.count >= cfg.min_baseline_windows:
-                dev = max(
-                    baseline.deviation, cfg.dev_floor_frac * abs(baseline.mean), 1e-9
-                )
-                z = (win_mean - baseline.mean) / dev
-                if z > cfg.drift_z:
-                    extras["n_drifted_windows"] += 1
-                    grade = min(1.0, (z - cfg.drift_z) / cfg.drift_z)
-                    if end_seq > emit_wm:  # replayed windows: count, don't re-emit
-                        windows.append(
-                            (end_seq, win_mean, baseline.mean + cfg.drift_z * dev, grade)
-                        )
-                    # drifted windows do not contaminate the baseline
-                    extras["win_sum"] = extras["win_cnt"] = 0.0
-                    return
-            baseline.update(win_mean)
-            extras["win_sum"] = extras["win_cnt"] = 0.0
-
-        B = len(X)
-        done = extras["n_rows"]  # boundary-aligned when resuming
-        oa = forest.output_after
-
-        def next_boundary(n: int) -> int:
-            """Absolute chunk grid: [0, output_after, output_after + k·C].
-            Checkpoints land only on this grid, so any resume reproduces
-            the same score-then-update boundaries (bit-exact resume)."""
-            if n < oa:
-                return oa
-            return oa + ((n - oa) // cfg.chunk_size + 1) * cfg.chunk_size
-
-        def process(lo: int, hi: int) -> None:
-            if hi <= lo:
+            z = (win_mean - baseline.mean) / dev
+            if z > cfg.drift_z:
+                extras["n_drifted_windows"] += 1
+                grade = min(1.0, (z - cfg.drift_z) / cfg.drift_z)
+                if end_seq > emit_wm:  # replayed windows: count, don't re-emit
+                    windows.append(
+                        (end_seq, win_mean, baseline.mean + cfg.drift_z * dev, grade)
+                    )
+                # drifted windows do not contaminate the baseline
+                extras["win_sum"] = extras["win_cnt"] = 0.0
                 return
-            chunk = X[lo:hi]
-            imp = imputed[lo:hi]
-            t0 = _time.perf_counter() if prof is not None else 0.0
-            base, real, xn, raw_last, updated = _transform_chunk(
-                tf, chunk, imp, norm, extras["tlast"]
-            )
-            if prof is not None:
-                _acc("transform", t0)
-            if (
-                cfg.mode == "streaming_impute"
-                and cfg.impute_method == "rcf"
-                and imp.any()
-                and forest.is_output_ready
-            ):
-                # lazy RCF imputation with the forest state at chunk start
-                # (chunk-granular analogue of ImputeVisitor-at-gap-time),
-                # in the FOREST'S space: the forest is trained on the
-                # transformed xn, so its leaf points are transformed values
-                # — imputing into the raw chunk would double-transform.
-                # The raw placeholder (previous value) still anchors
-                # gap-fill/difference state. Deterministic per seq, so a
-                # resume replays identically.
-                from ..core.queries import impute as rcf_impute
+        baseline.update(win_mean)
+        extras["win_sum"] = extras["win_cnt"] = 0.0
 
-                all_dims = list(range(xn.shape[1]))
-                for j in np.flatnonzero(imp):
-                    # all dims missing = sample-from-forest degenerate case:
-                    # a tight leaf cap keeps the both-branch enumeration
-                    # bounded without changing the central-median estimate
-                    xn[j] = rcf_impute(
-                        forest, xn[j], all_dims, seed=int(seqs[lo + j]),
-                        max_leaves_per_tree=8,
-                    )
-            # shingling: forest points are windows of the last s_sh
-            # transformed rows; rows before the first full shingle (stream
-            # start) are consumed without scoring or updating
-            # (ShingleBuilder warm-up)
-            if s_sh > 1:
-                tail = extras["sh_tail"]
-                cat = np.vstack([tail, xn]) if len(tail) else xn
-                if len(cat) >= s_sh:
-                    pts = np.ascontiguousarray(
-                        np.lib.stride_tricks.sliding_window_view(
-                            cat, (s_sh, cat.shape[1])
-                        )[:, 0].reshape(-1, s_sh * cat.shape[1]),
-                        np.float32,
-                    )
-                    row_map = np.arange(len(pts), dtype=np.int64) + (
-                        s_sh - 1 - len(tail)
-                    )
-                else:
-                    pts = np.zeros((0, s_sh * cat.shape[1]), np.float32)
-                    row_map = np.zeros(0, np.int64)
-                extras["sh_tail"] = cat[max(0, len(cat) - (s_sh - 1)):].copy()
+    B = len(X)
+    done = extras["n_rows"]  # boundary-aligned when resuming
+    oa = forest.output_after
+
+    def next_boundary(n: int) -> int:
+        """Absolute chunk grid: [0, output_after, output_after + k·C].
+        Checkpoints land only on this grid, so any resume reproduces
+        the same score-then-update boundaries (bit-exact resume)."""
+        if n < oa:
+            return oa
+        return oa + ((n - oa) // cfg.chunk_size + 1) * cfg.chunk_size
+
+    def process(lo: int, hi: int) -> None:
+        if hi <= lo:
+            return
+        chunk = X[lo:hi]
+        imp = imputed[lo:hi]
+        t0 = _time.perf_counter() if prof is not None else 0.0
+        base, real, xn, raw_last, updated = _transform_chunk(
+            tf, chunk, imp, norm, extras["tlast"]
+        )
+        if prof is not None:
+            _acc("transform", t0)
+        if (
+            cfg.mode == "streaming_impute"
+            and cfg.impute_method == "rcf"
+            and imp.any()
+            and forest.is_output_ready
+        ):
+            # lazy RCF imputation with the forest state at chunk start
+            # (chunk-granular analogue of ImputeVisitor-at-gap-time),
+            # in the FOREST'S space: the forest is trained on the
+            # transformed xn, so its leaf points are transformed values
+            # — imputing into the raw chunk would double-transform.
+            # The raw placeholder (previous value) still anchors
+            # gap-fill/difference state. Deterministic per seq, so a
+            # resume replays identically.
+            from ..core.queries import impute as rcf_impute
+
+            all_dims = list(range(xn.shape[1]))
+            for j in np.flatnonzero(imp):
+                # all dims missing = sample-from-forest degenerate case:
+                # a tight leaf cap keeps the both-branch enumeration
+                # bounded without changing the central-median estimate
+                xn[j] = rcf_impute(
+                    forest, xn[j], all_dims, seed=int(seqs[lo + j]),
+                    max_leaves_per_tree=8,
+                )
+        pts, row_map, extras["sh_tail"] = _shingle(extras["sh_tail"], xn, s_sh)
+        imp_p = imp[row_map]
+        seq_p = seqs[lo:hi][row_map]
+        if forest.is_output_ready and len(pts):
+            t0 = _time.perf_counter() if prof is not None else 0.0
+            ds = None
+            if cfg.scoring == "distance":
+                # ScoringStrategy.DISTANCE: the directional-distance
+                # DiVector sum replaces the inverse-depth score
+                from ..core.queries import density as _density_q
+
+                dres = _density_q(forest, pts)
+                scores = (dres["dist_high"] + dres["dist_low"]).sum(1)
             else:
-                pts = xn
-                row_map = np.arange(len(chunk), dtype=np.int64)
-            imp_p = imp[row_map]
-            seq_p = seqs[lo:hi][row_map]
-            if forest.is_output_ready and len(pts):
-                t0 = _time.perf_counter() if prof is not None else 0.0
-                ds = None
-                if cfg.scoring == "distance":
-                    # ScoringStrategy.DISTANCE: the directional-distance
-                    # DiVector sum replaces the inverse-depth score
+                scores = forest.score(pts)
+                if cfg.scoring in ("multi_mode", "multi_mode_recall"):
                     from ..core.queries import density as _density_q
 
                     dres = _density_q(forest, pts)
-                    scores = (dres["dist_high"] + dres["dist_low"]).sum(1)
-                else:
-                    scores = forest.score(pts)
-                    if cfg.scoring in ("multi_mode", "multi_mode_recall"):
-                        from ..core.queries import density as _density_q
-
-                        dres = _density_q(forest, pts)
-                        ds = (dres["dist_high"] + dres["dist_low"]).sum(1)
-                if prof is not None:
-                    _acc("score", t0)
-                    t0 = _time.perf_counter()
-                flagged: list[tuple] = []
-                recall_emit: list[tuple] = []
-                real_pos = np.flatnonzero(~imp_p)
-                rs = scores[real_pos]
-                if len(rs):
-                    # vectorized threshold-then-update over the chunk
-                    # (imputed rows maintain state, not signal)
-                    if cfg.scoring == "distance":
-                        thr_arr, grade_arr = th.primary_process_batch(rs)
-                    else:
-                        thr_arr, grade_arr = th.process_batch(rs, normalized=do_norm)
-                    if ds is not None:
-                        thr2_arr, g2_arr = th2.primary_process_batch(ds[real_pos])
-                        if cfg.scoring == "multi_mode":
-                            # multi-mode veto (PredictorCorrector.java:
-                            # 785-792): a warm distance thresholder grading
-                            # the point 0 zeroes the inverse-depth grade
-                            grade_arr = np.where(
-                                (grade_arr > 0) & (thr2_arr > 0) & (g2_arr == 0),
-                                0.0,
-                                grade_arr,
-                            )
-                        else:
-                            # MULTI_MODE_RECALL (PredictorCorrector.java:
-                            # 809-820): a primary-grade-0 point whose gap
-                            # since the last significant anomaly reaches
-                            # shingleSize is re-graded by the warm distance
-                            # thresholder; significant = primary-flagged or
-                            # re-elevated (lastSignificantDescriptor). The
-                            # scan touches only candidate rows (anomaly-
-                            # bounded, not row-bounded).
-                            last_sig = int(extras.get("rc_last_seq", -(1 << 62)))
-                            seq_real = seq_p[real_pos]
-                            ds_real = ds[real_pos]
-                            for i in np.flatnonzero(
-                                (grade_arr > 0) | ((thr2_arr > 0) & (g2_arr > 0))
-                            ):
-                                if grade_arr[i] > 0:
-                                    last_sig = int(seq_real[i])
-                                elif int(seq_real[i]) - last_sig >= s_sh:
-                                    last_sig = int(seq_real[i])
-                                    if g2_arr[i] >= cfg.min_emit_grade:
-                                        recall_emit.append(
-                                            (int(seq_real[i]), float(ds_real[i]),
-                                             float(thr2_arr[i]), float(g2_arr[i]))
-                                        )
-                            extras["rc_last_seq"] = last_sig
-                    extras["n_scored"] += len(rs)
-                    extras["score_sum"] += float(rs.sum())
-                    # window accounting: segment sums between closures
-                    start = 0
-                    while start < len(rs):
-                        take = min(
-                            int(cfg.window - extras["win_cnt"]), len(rs) - start
-                        )
-                        extras["win_sum"] += float(rs[start : start + take].sum())
-                        extras["win_cnt"] += take
-                        start += take
-                        if extras["win_cnt"] >= cfg.window:
-                            close_window(int(seq_p[real_pos[start - 1]]))
-                    for i in np.flatnonzero(grade_arr >= cfg.min_emit_grade):
-                        flagged.append(
-                            (int(real_pos[i]), float(rs[i]),
-                             float(thr_arr[i]), float(grade_arr[i]))
-                        )
-                if prof is not None:
-                    _acc("threshold", t0)
-                    t0 = _time.perf_counter()
-                if flagged:
-                    if corrector is not None and s_sh > 1:
-                        # slot-aware shingle analysis: the spike sliding
-                        # through later shingles is the SAME anomaly
-                        # (PredictorCorrector.java:795-905)
-                        idx = np.fromiter((f[0] for f in flagged), np.int64)
-                        thr = np.fromiter((f[2] for f in flagged), np.float64)
-                        shstate = {
-                            "last_anomaly_seq": extras.get(
-                                "sh_last_seq", -(1 << 62)
-                            ),
-                            "last_anomaly_score": extras.get("sh_last_score", 0.0),
-                        }
-                        sup, _, _ = corrector.suppress_shingle_batch(
-                            forest, pts[idx].astype(np.float64), thr,
-                            seq_p[idx], s_sh, shstate,
-                        )
-                        extras["sh_last_seq"] = shstate["last_anomaly_seq"]
-                        extras["sh_last_score"] = shstate["last_anomaly_score"]
-                    elif corrector is not None:
-                        idx = np.fromiter((f[0] for f in flagged), np.int64)
-                        thr = np.fromiter((f[2] for f in flagged), np.float64)
-                        if cfg.auto_adjust:
-                            sup, fdims, exp_pts = corrector.should_suppress_batch(
-                                forest, pts[idx].astype(np.float64), thr,
-                                return_dims=True, return_expected=True,
-                            )
-                        else:
-                            sup, fdims = corrector.should_suppress_batch(
-                                forest, pts[idx].astype(np.float64), thr,
-                                return_dims=True,
-                            )
-                            exp_pts = None
-                        if cfg.run_length_suppression:
-                            sup = corrector.run_length_filter(
-                                sup, seq_p[idx], fdims, extras,
-                                cfg.run_gap, cfg.trigger_factor,
-                            )
-                        if cfg.auto_adjust:
-                            # the candidate stream = every thresholder-
-                            # positive real row (the reference's
-                            # inHighScoreRegion set); emitted rows are the
-                            # subset actually tested for DATA_DRIFT
-                            cand = real_pos[np.flatnonzero(grade_arr > 0)]
-                            sup = corrector.auto_adjust_batch(
-                                sup, pts[idx].astype(np.float64), exp_pts,
-                                seq_p[idx],
-                                cand_X=pts[cand].astype(np.float64),
-                                cand_seqs=seq_p[cand],
-                                step=cfg.expected_step,
-                            )
-                    else:
-                        sup = np.zeros(len(flagged), bool)
-                    for (i, s, threshold, grade), s_flag in zip(flagged, sup):
-                        if s_flag:
-                            continue
-                        extras["n_anomalous"] += 1
-                        if seq_p[i] > emit_wm:  # suppress replayed rows
-                            anomalies.append(
-                                (int(seq_p[i]), s, threshold, grade)
-                            )
-                for seq, s2, t2, g2 in recall_emit:
-                    # distance-path re-elevations bypass the inverse-depth
-                    # corrector (scale-mismatched); replay watermark applies
-                    extras["n_anomalous"] += 1
-                    if seq > emit_wm:
-                        anomalies.append((seq, s2, t2, g2))
-                if prof is not None:
-                    _acc("corrector", t0)
-            t0 = _time.perf_counter() if prof is not None else 0.0
-            if do_stat and not updated and len(real):
-                norm.update(real)
-            if imp.any():
-                # useImputedFraction gate (Preprocessor.java:84): the forest
-                # stops learning from imputed rows while the discounted
-                # imputed fraction exceeds the cap — a long outage cannot
-                # collapse the sketch onto its own imputations.
-                f = 1.0 - 1.0 / max(cfg.sample_size, 2)
-                pre_ema, end_ema = _imp_ema_batch(imp, extras["imp_ema"], f)
-                allowed = np.ones(len(chunk), bool)
-                allowed[imp] = pre_ema[imp] <= cfg.max_imputed_frac
-                extras["imp_ema"] = end_ema
-                extras["n_imputed"] += int(imp.sum())
-                upd = allowed[row_map]
-                if upd.any():
-                    forest.update_batch(pts[upd], seqs=seq_p[upd])
-            else:
-                extras["imp_ema"] *= (1.0 - 1.0 / max(cfg.sample_size, 2)) ** len(chunk)
-                if len(pts):
-                    forest.update_batch(pts, seqs=seq_p)
-            extras["n_rows"] += hi - lo
-            extras["tlast"] = raw_last
+                    ds = (dres["dist_high"] + dres["dist_low"]).sum(1)
             if prof is not None:
-                _acc("update", t0)
-
-        chunks = []
-        pos = 0
-        while pos < B:
-            hi = min(B, next_boundary(done + pos) - done)
-            chunks.append((pos, hi))
-            pos = hi
-        tail_lo = B
-        if ckpt and chunks and (done + B) < next_boundary(done + chunks[-1][0]):
-            tail_lo = chunks.pop()[0]  # defer the partial tail to the buffer
-        for lo, hi in chunks:
-            process(lo, hi)
-
-        if ckpt:
-            state = _state_dict(
-                forest, th, norm, extras, X[tail_lo:], seqs[tail_lo:],
-                imputed[tail_lo:], th2=th2, corrector=corrector,
-            )
-            process(tail_lo, B)  # tail: emitted now, replayed next run
-            state["extras"][0] = extras["last_seq"] = (
-                int(seqs[-1]) if B else extras["last_seq"]
-            )
-            _write_group_state(ckpt, state)
+                _acc("score", t0)
+                t0 = _time.perf_counter()
+            flagged: list[tuple] = []
+            recall_emit: list[tuple] = []
+            real_pos = np.flatnonzero(~imp_p)
+            rs = scores[real_pos]
+            if len(rs):
+                # vectorized threshold-then-update over the chunk
+                # (imputed rows maintain state, not signal)
+                if cfg.scoring == "distance":
+                    thr_arr, grade_arr = th.primary_process_batch(rs)
+                else:
+                    thr_arr, grade_arr = th.process_batch(rs, normalized=do_norm)
+                if ds is not None:
+                    thr2_arr, g2_arr = th2.primary_process_batch(ds[real_pos])
+                    if cfg.scoring == "multi_mode":
+                        # multi-mode veto (PredictorCorrector.java:
+                        # 785-792): a warm distance thresholder grading
+                        # the point 0 zeroes the inverse-depth grade
+                        grade_arr = np.where(
+                            (grade_arr > 0) & (thr2_arr > 0) & (g2_arr == 0),
+                            0.0,
+                            grade_arr,
+                        )
+                    else:
+                        # MULTI_MODE_RECALL (PredictorCorrector.java:
+                        # 809-820): a primary-grade-0 point whose gap
+                        # since the last significant anomaly reaches
+                        # shingleSize is re-graded by the warm distance
+                        # thresholder; significant = primary-flagged or
+                        # re-elevated (lastSignificantDescriptor). The
+                        # scan touches only candidate rows (anomaly-
+                        # bounded, not row-bounded).
+                        last_sig = int(extras.get("rc_last_seq", -(1 << 62)))
+                        seq_real = seq_p[real_pos]
+                        ds_real = ds[real_pos]
+                        for i in np.flatnonzero(
+                            (grade_arr > 0) | ((thr2_arr > 0) & (g2_arr > 0))
+                        ):
+                            if grade_arr[i] > 0:
+                                last_sig = int(seq_real[i])
+                            elif int(seq_real[i]) - last_sig >= s_sh:
+                                last_sig = int(seq_real[i])
+                                if g2_arr[i] >= cfg.min_emit_grade:
+                                    recall_emit.append(
+                                        (int(seq_real[i]), float(ds_real[i]),
+                                         float(thr2_arr[i]), float(g2_arr[i]))
+                                    )
+                        extras["rc_last_seq"] = last_sig
+                extras["n_scored"] += len(rs)
+                extras["score_sum"] += float(rs.sum())
+                # window accounting: segment sums between closures
+                start = 0
+                while start < len(rs):
+                    take = min(
+                        int(cfg.window - extras["win_cnt"]), len(rs) - start
+                    )
+                    extras["win_sum"] += float(rs[start : start + take].sum())
+                    extras["win_cnt"] += take
+                    start += take
+                    if extras["win_cnt"] >= cfg.window:
+                        close_window(int(seq_p[real_pos[start - 1]]))
+                for i in np.flatnonzero(grade_arr >= cfg.min_emit_grade):
+                    flagged.append(
+                        (int(real_pos[i]), float(rs[i]),
+                         float(thr_arr[i]), float(grade_arr[i]))
+                    )
+            if prof is not None:
+                _acc("threshold", t0)
+                t0 = _time.perf_counter()
+            if flagged:
+                if corrector is not None and s_sh > 1:
+                    # slot-aware shingle analysis: the spike sliding
+                    # through later shingles is the SAME anomaly
+                    # (PredictorCorrector.java:795-905)
+                    idx = np.fromiter((f[0] for f in flagged), np.int64)
+                    thr = np.fromiter((f[2] for f in flagged), np.float64)
+                    shstate = {
+                        "last_anomaly_seq": extras.get(
+                            "sh_last_seq", -(1 << 62)
+                        ),
+                        "last_anomaly_score": extras.get("sh_last_score", 0.0),
+                    }
+                    sup, _, _ = corrector.suppress_shingle_batch(
+                        forest, pts[idx].astype(np.float64), thr,
+                        seq_p[idx], s_sh, shstate,
+                    )
+                    extras["sh_last_seq"] = shstate["last_anomaly_seq"]
+                    extras["sh_last_score"] = shstate["last_anomaly_score"]
+                elif corrector is not None:
+                    idx = np.fromiter((f[0] for f in flagged), np.int64)
+                    thr = np.fromiter((f[2] for f in flagged), np.float64)
+                    if cfg.auto_adjust:
+                        sup, fdims, exp_pts = corrector.should_suppress_batch(
+                            forest, pts[idx].astype(np.float64), thr,
+                            return_dims=True, return_expected=True,
+                        )
+                    else:
+                        sup, fdims = corrector.should_suppress_batch(
+                            forest, pts[idx].astype(np.float64), thr,
+                            return_dims=True,
+                        )
+                        exp_pts = None
+                    if cfg.run_length_suppression:
+                        sup = corrector.run_length_filter(
+                            sup, seq_p[idx], fdims, extras,
+                            cfg.run_gap, cfg.trigger_factor,
+                        )
+                    if cfg.auto_adjust:
+                        # the candidate stream = every thresholder-
+                        # positive real row (the reference's
+                        # inHighScoreRegion set); emitted rows are the
+                        # subset actually tested for DATA_DRIFT
+                        cand = real_pos[np.flatnonzero(grade_arr > 0)]
+                        sup = corrector.auto_adjust_batch(
+                            sup, pts[idx].astype(np.float64), exp_pts,
+                            seq_p[idx],
+                            cand_X=pts[cand].astype(np.float64),
+                            cand_seqs=seq_p[cand],
+                            step=cfg.expected_step,
+                        )
+                else:
+                    sup = np.zeros(len(flagged), bool)
+                for (i, s, threshold, grade), s_flag in zip(flagged, sup):
+                    if s_flag:
+                        continue
+                    extras["n_anomalous"] += 1
+                    if seq_p[i] > emit_wm:  # suppress replayed rows
+                        anomalies.append(
+                            (int(seq_p[i]), s, threshold, grade)
+                        )
+            for seq, s2, t2, g2 in recall_emit:
+                # distance-path re-elevations bypass the inverse-depth
+                # corrector (scale-mismatched); replay watermark applies
+                extras["n_anomalous"] += 1
+                if seq > emit_wm:
+                    anomalies.append((seq, s2, t2, g2))
+            if prof is not None:
+                _acc("corrector", t0)
+        t0 = _time.perf_counter() if prof is not None else 0.0
+        if do_stat and not updated and len(real):
+            norm.update(real)
+        if imp.any():
+            # useImputedFraction gate (Preprocessor.java:84): the forest
+            # stops learning from imputed rows while the discounted
+            # imputed fraction exceeds the cap — a long outage cannot
+            # collapse the sketch onto its own imputations.
+            f = 1.0 - 1.0 / max(cfg.sample_size, 2)
+            pre_ema, end_ema = _imp_ema_batch(imp, extras["imp_ema"], f)
+            allowed = np.ones(len(chunk), bool)
+            allowed[imp] = pre_ema[imp] <= cfg.max_imputed_frac
+            extras["imp_ema"] = end_ema
+            extras["n_imputed"] += int(imp.sum())
+            upd = allowed[row_map]
+            if upd.any():
+                forest.update_batch(pts[upd], seqs=seq_p[upd])
         else:
-            process(tail_lo, B)
-            if B:
-                extras["last_seq"] = int(seqs[-1])
-
+            extras["imp_ema"] *= (1.0 - 1.0 / max(cfg.sample_size, 2)) ** len(chunk)
+            if len(pts):
+                forest.update_batch(pts, seqs=seq_p)
+        extras["n_rows"] += hi - lo
+        extras["tlast"] = raw_last
         if prof is not None:
-            prof["task_total"] = _time.perf_counter() - t_all
-            prof["n_rows"] = float(len(X))
-            os.makedirs(prof_dir, exist_ok=True)
-            tag = hashlib.blake2b(
-                "\x1f".join(str(k) for k in key).encode(), digest_size=6
-            ).hexdigest()
-            with open(os.path.join(prof_dir, f"task-{os.getpid()}-{tag}.json"), "w") as fh:
-                import json as _json
+            _acc("update", t0)
 
-                _json.dump(prof, fh)
+    chunks = []
+    pos = 0
+    while pos < B:
+        hi = min(B, next_boundary(done + pos) - done)
+        chunks.append((pos, hi))
+        pos = hi
+    tail_lo = B
+    if ckpt and chunks and (done + B) < next_boundary(done + chunks[-1][0]):
+        tail_lo = chunks.pop()[0]  # defer the partial tail to the buffer
+    for lo, hi in chunks:
+        process(lo, hi)
 
-        keyvals = list(key)
-        rows = [
-            keyvals + [seq, score, threshold, grade, "anomaly",
-                       0, 0, 0, 0, 0, 0, 0.0]
-            for seq, score, threshold, grade in anomalies
-        ]
-        rows += [
-            keyvals + [seq, score, threshold, grade, "window",
-                       0, 0, 0, 0, 0, 0, 0.0]
-            for seq, score, threshold, grade in windows
-        ]
-        mean_score = (
-            extras["score_sum"] / extras["n_scored"] if extras["n_scored"] else 0.0
+    if ckpt:
+        state = _state_dict(
+            forest, th, norm, extras, X[tail_lo:], seqs[tail_lo:],
+            imputed[tail_lo:], th2=th2, corrector=corrector,
         )
-        rows.append(
-            keyvals
-            + [SUMMARY_SEQ, 0.0, 0.0, 0.0, "summary", extras["n_rows"],
-               extras["n_scored"], extras["n_anomalous"], extras["n_windows"],
-               extras["n_drifted_windows"], extras["n_imputed"], mean_score]
+        process(tail_lo, B)  # tail: emitted now, replayed next run
+        state["extras"][0] = extras["last_seq"] = (
+            int(seqs[-1]) if B else extras["last_seq"]
         )
-        return pd.DataFrame(rows, columns=out_cols)
+        _write_group_state(ckpt, state)
+    else:
+        process(tail_lo, B)
+        if B:
+            extras["last_seq"] = int(seqs[-1])
+
+    if prof is not None:
+        prof["task_total"] = _time.perf_counter() - t_all
+        prof["n_rows"] = float(len(X))
+        os.makedirs(prof_dir, exist_ok=True)
+        tag = hashlib.blake2b(
+            "\x1f".join(str(k) for k in key).encode(), digest_size=6
+        ).hexdigest()
+        with open(os.path.join(prof_dir, f"task-{os.getpid()}-{tag}.json"), "w") as fh:
+            import json as _json
+
+            _json.dump(prof, fh)
+
+    # (seq, score, threshold, grade) per anomaly and drifted window, then
+    # the summary row, whose counters are zero on the other rows
+    rows = [(*r, "anomaly") for r in anomalies] + [(*r, "window") for r in windows]
+    rows.append((SUMMARY_SEQ, 0.0, 0.0, 0.0, "summary"))
+    seq, score, threshold, grade, kind = zip(*rows)
+    out = {"seq": np.array(seq, np.int64), "score": np.array(score, np.float64),
+           "threshold": np.array(threshold, np.float64),
+           "grade": np.array(grade, np.float64), "row_kind": list(kind)}
+    extras["mean_score"] = (
+        extras["score_sum"] / extras["n_scored"] if extras["n_scored"] else 0.0
+    )
+    for name, ddl in _RESULT_COLS[4:]:
+        out[name] = np.zeros(len(rows), np.int64 if ddl == "long" else np.float64)
+        out[name][-1] = extras[name]
+    return out
+
+
+def _feature_matrix(col, seqs: np.ndarray, group: str, order_col: str) -> np.ndarray:
+    """float64[n, d] matrix of a ``list<float|double>`` column: the group's
+    batches combined into one list array whose flat child values are
+    reshaped by its offsets. Every row must hold an array as wide as the
+    group's first row (in ``order_col`` order); NULL elements stay NaN."""
+    arr = col.combine_chunks()
+    null = arr.is_null().to_numpy(zero_copy_only=False)
+    if null.any():
+        raise ValueError(
+            f"drift_scores: NULL feature array in group {group} "
+            f"at {order_col}={seqs[null].min()}"
+        )
+    widths = np.diff(arr.offsets.to_numpy())
+    d = int(widths[np.argmin(seqs)])
+    wrong = widths != d
+    if wrong.any():
+        i = np.flatnonzero(wrong)[np.argmin(seqs[wrong])]
+        raise ValueError(
+            f"drift_scores: feature array of length {widths[i]} in group "
+            f"{group} at {order_col}={seqs[i]}; the group's first row has {d}"
+        )
+    flat = arr.flatten().to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64, copy=False).reshape(len(arr), d)
+
+
+def _arrow_drift_fn(key_cols: list[str], order_col: str, feature_col: str, cfg: DriftConfig):
+    """The ``applyInArrow`` adapter around ``drift_group`` (pickled to
+    executors): Arrow group in, Arrow result table out."""
+    import pyarrow as pa
+
+    def fn(key, table):
+        keyvals = tuple(k.as_py() for k in key)
+        group = ", ".join(f"{c}={v!r}" for c, v in zip(key_cols, keyvals))
+        seqs = np.asarray(table.column(order_col).to_numpy(), np.int64)
+        X = _feature_matrix(table.column(feature_col), seqs, group, order_col)
+        anchor = None
+        if "__anchor" in table.column_names:
+            # range blocks: the previous block's last real row rides along
+            # as the one marked anchor row (see drift_scores)
+            amask = table.column("__anchor").to_numpy() == 1
+            if amask.any():
+                a = np.flatnonzero(amask)[0]
+                anchor = (int(seqs[a]), X[a])
+                seqs, X = seqs[~amask], X[~amask]
+        out = drift_group(keyvals, seqs, X, cfg, anchor)
+        cols = {c: pa.repeat(k, len(out["seq"])) for c, k in zip(key_cols, key)}
+        cols[order_col] = out.pop("seq")
+        return pa.Table.from_pydict({**cols, **out})
 
     return fn
 
@@ -1059,7 +1065,7 @@ def drift_scores(
         raise ValueError(f"unknown ImputationMethod {cfg.impute_method!r}")
     _METHODS = ("none", "normalize", "difference", "normalize_difference",
                 "weighted", "subtract_ma")
-    if cfg.transform is not None and cfg.transform not in _METHODS:
+    if cfg.transform not in _METHODS:
         raise ValueError(f"unknown TransformMethod {cfg.transform!r}")
     if cfg.shingle_size < 1:
         raise ValueError("shingle_size must be >= 1")
@@ -1141,15 +1147,14 @@ def drift_scores(
         # tasks while small keys keep one warm forest instead of many cold
         # ones. The per-key count is computed distributively and joined
         # back (no driver-side collect — group_cols may be high-cardinality).
-        if cfg.buckets is not None:
-            bucketed = df.select(
-                *gcols,
-                F.pmod(F.xxhash64(F.col(order_col), F.lit(cfg.seed)), F.lit(cfg.buckets))
-                .cast("int")
-                .alias("bucket"),
-                F.col(order_col),
-                F.col(feature_col),
+        def salted(frame: DataFrame, n_buckets) -> DataFrame:
+            bucket = F.pmod(F.xxhash64(F.col(order_col), F.lit(cfg.seed)), n_buckets)
+            return frame.select(
+                *gcols, bucket.cast("int").alias("bucket"), F.col(order_col), F.col(feature_col)
             )
+
+        if cfg.buckets is not None:
+            bucketed = salted(df, F.lit(cfg.buckets))
         else:
             nb = F.greatest(
                 F.lit(1),
@@ -1184,30 +1189,13 @@ def drift_scores(
                 nb_col = F.coalesce(
                     F.try_element_at(F.create_map(*kv), F.col(gcols[0])), F.lit(1)
                 )
-                bucketed = df.select(
-                    *gcols,
-                    F.pmod(F.xxhash64(F.col(order_col), F.lit(cfg.seed)), nb_col)
-                    .cast("int")
-                    .alias("bucket"),
-                    F.col(order_col),
-                    F.col(feature_col),
-                )
+                bucketed = salted(df, nb_col)
             else:
                 # high-cardinality groups: broadcast-join the aggregated
                 # counts (still no raw-row collect)
-                bucketed = (
-                    df.join(F.broadcast(counts), gcols, "left")
-                    .select(
-                        *gcols,
-                        F.pmod(
-                            F.xxhash64(F.col(order_col), F.lit(cfg.seed)),
-                            F.coalesce(F.col("__nb"), F.lit(1)),
-                        )
-                        .cast("int")
-                        .alias("bucket"),
-                        F.col(order_col),
-                        F.col(feature_col),
-                    )
+                bucketed = salted(
+                    df.join(F.broadcast(counts), gcols, "left"),
+                    F.coalesce(F.col("__nb"), F.lit(1)),
                 )
             cfg = replace(cfg, extra={**cfg.extra, "__total_buckets": total_buckets})
     key_cols = gcols + ["bucket"]
@@ -1235,42 +1223,18 @@ def drift_scores(
         n_part = cfg.extra.get("parallelism") or max(16, min(2 * known_b, 30_000))
     else:
         n_part = cfg.extra.get("parallelism") or max(dp * 2, 16)
-    # Scalarize the feature array to __feat{j} float columns BEFORE the
-    # exchange (guide §2.3 project-before-exchange + §4 fewer bytes
-    # across the Arrow boundary): flat float vectors shuffle tighter
-    # than list arrays, and on the Python side each column arrives as
-    # one contiguous buffer instead of 2M per-row ndarray objects
-    # (measured 5.1 -> 2.7 s trivial-fn grouped-map wall at 2M rows).
-    # The width is probed from one row; an empty/NULL-leading input
-    # falls back to shipping the array column unchanged (the grouped
-    # map accepts both shapes).
-    d_feat = None
-    try:
-        r0 = df.select(F.size(F.col(feature_col)).alias("d")).first()
-        if r0 is not None and r0["d"] is not None and int(r0["d"]) > 0:
-            d_feat = int(r0["d"])
-    except Exception:
-        d_feat = None
-    if d_feat:
-        bucketed = bucketed.select(
-            *[c for c in bucketed.columns if c != feature_col],
-            *[
-                F.element_at(F.col(feature_col), j + 1).alias(f"__feat{j}")
-                for j in range(d_feat)
-            ],
-        )
+    # the feature array crosses the exchange and the Arrow boundary as-is:
+    # the grouped map reads it as one flat child-value buffer, so no
+    # driver job probes its width and no per-row objects are built
     bucketed = bucketed.repartition(n_part, *key_cols)
     schema_prefix = ", ".join(
         f"{c} {t}" for c, t in bucketed.select(*key_cols).dtypes
     )
-    out_schema = (
-        f"{schema_prefix}, {order_col} long, score double, threshold double, "
-        "grade double, row_kind string, n_rows long, n_scored long, "
-        "n_anomalous long, n_windows long, n_drifted_windows long, "
-        "n_imputed long, mean_score double"
+    out_schema = f"{schema_prefix}, {order_col} long, " + ", ".join(
+        f"{c} {t}" for c, t in _RESULT_COLS
     )
-    fn = _make_drift_fn(key_cols, order_col, feature_col, cfg)
-    return bucketed.groupBy(*key_cols).applyInPandas(fn, schema=out_schema)
+    fn = _arrow_drift_fn(key_cols, order_col, feature_col, cfg)
+    return bucketed.groupBy(*key_cols).applyInArrow(fn, schema=out_schema)
 
 
 def drift_verdicts(raw: DataFrame, group_cols=("source",), cfg: DriftConfig | None = None) -> DataFrame:
@@ -1323,8 +1287,6 @@ def drift_lineage(
     ``config_digest`` fingerprints the DriftConfig so re-runs with
     different hyperparameters are distinguishable in the metrics table.
     """
-    import hashlib
-
     cfg = cfg or DriftConfig()
     core = {
         k: v for k, v in vars(cfg).items() if k != "extra" and not callable(v)

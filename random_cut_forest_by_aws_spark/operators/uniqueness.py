@@ -33,18 +33,12 @@ from pyspark.sql import functions as F
 def uniqueness_violations(
     df: DataFrame,
     key_cols: Sequence[str],
-    salt_buckets: int = 64,
     count_nulls: bool = False,
 ) -> DataFrame:
     """Rows ``(key..., dup_count)`` for every key appearing more than once.
 
     Null keys are a separate constraint (null-rate in stats); by default
     they are excluded here, matching SQL UNIQUE semantics.
-
-    ``salt_buckets`` is retained for signature stability; the explicit
-    pre-salt it sized was removed in round 6 (see module docstring —
-    map-side partial aggregation provides the same hot-key splitting
-    without the second shuffle), so it is no longer consulted.
     """
     # NOT spread via ensure_compute_parallelism (round-6 A/B): the
     # aggregate is a cheap key-only hash map — on a single-file input
@@ -67,11 +61,9 @@ def uniqueness_violations(
     )
 
 
-def uniqueness_verdict(
-    df: DataFrame, key_cols: Sequence[str], salt_buckets: int = 64
-) -> DataFrame:
+def uniqueness_verdict(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
     """One-row summary: number of violating keys and excess rows."""
-    v = uniqueness_violations(df, key_cols, salt_buckets)
+    v = uniqueness_violations(df, key_cols)
     return v.agg(
         F.count(F.lit(1)).alias("violating_keys"),
         F.coalesce(F.sum(F.col("dup_count") - 1), F.lit(0)).alias("excess_rows"),

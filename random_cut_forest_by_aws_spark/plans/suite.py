@@ -12,7 +12,7 @@ reference's ``AnomalyDescriptor`` stream, re-shaped for batch validation):
 Plan shape (what Catalyst sees): the stats/uniqueness/invariant checks are
 independent aggregations over the scan (column-pruned per check);
 referential reuses the stats aggregation (anti-join over #distinct-keys
-rows, never the fact table); drift is a single groupBy→applyInPandas.
+rows, never the fact table); drift is a single groupBy→applyInArrow.
 The independent checks are *materialized concurrently* from driver
 threads — per-job scheduling latency overlaps, and the JVM-bound scans
 share the cluster with the Python-bound drift stage instead of

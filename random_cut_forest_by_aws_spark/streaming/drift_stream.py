@@ -40,6 +40,7 @@ from ..operators.drift import (
     _load_group_state,
     _Normalizer,
     _resolve_transform,
+    _shingle,
     _state_dict,
     _transform_chunk,
 )
@@ -65,9 +66,9 @@ def _pack(
     return buf.getvalue()
 
 
-def _unpack(blob: bytes, mean_only: bool = False, base_dim: int | None = None):
+def _unpack(blob: bytes, mean_only: bool = False):
     forest, th, raw, extras = _load_group_state(io.BytesIO(blob))
-    d = base_dim or forest.d
+    d = forest.d
     norm = _Normalizer(d, 0.0, 100.0, mean_only=mean_only)
     norm.load_state(raw)
     tlast = extras.get("tlast", np.full(d, np.nan))
@@ -125,9 +126,7 @@ def streaming_drift_scores(
         tf = None
         if state.exists:
             forest, th, norm, tlast, sh_tail = _unpack(
-                bytes(state.get[0]),
-                mean_only=(cfg.transform == "subtract_ma"),
-                base_dim=None,
+                bytes(state.get[0]), mean_only=(cfg.transform == "subtract_ma")
             )
             tf = _resolve_transform(cfg, forest.d // s_sh)
         else:
@@ -164,25 +163,7 @@ def streaming_drift_scores(
                 # the last s−1 transformed rows rides the state blob, so
                 # windows spanning micro-batch boundaries score exactly
                 # like an unbroken stream
-                if s_sh > 1:
-                    cat = np.vstack([sh_tail, xn]) if len(sh_tail) else xn
-                    if len(cat) >= s_sh:
-                        pts = np.ascontiguousarray(
-                            np.lib.stride_tricks.sliding_window_view(
-                                cat, (s_sh, cat.shape[1])
-                            )[:, 0].reshape(-1, s_sh * cat.shape[1]),
-                            np.float32,
-                        )
-                        row_map = np.arange(len(pts), dtype=np.int64) + (
-                            s_sh - 1 - len(sh_tail)
-                        )
-                    else:
-                        pts = np.zeros((0, s_sh * cat.shape[1]), np.float32)
-                        row_map = np.zeros(0, np.int64)
-                    sh_tail = cat[max(0, len(cat) - (s_sh - 1)):].copy()
-                else:
-                    pts = xn
-                    row_map = np.arange(len(chunk), dtype=np.int64)
+                pts, row_map, sh_tail = _shingle(sh_tail, xn, s_sh)
                 sq_p = sq[row_map]
                 if forest.is_output_ready and len(pts):
                     scores = forest.score(pts)

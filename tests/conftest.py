@@ -19,3 +19,17 @@ def seqs(spark):
     df = sequences(spark, 10_000, seed=42).cache()
     df.count()
     return df
+
+
+@pytest.fixture
+def finish_stream():
+    """Wait for an availableNow streaming query to end — failing the test
+    if it is still running after ``timeout`` seconds — and always stop it."""
+
+    def finish(q, timeout: int = 300) -> None:
+        try:
+            assert q.awaitTermination(timeout)
+        finally:
+            q.stop()
+
+    return finish

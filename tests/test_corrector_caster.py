@@ -107,27 +107,20 @@ def test_run_length_filter_in_drift_operator():
     """End-to-end: a sustained all-dims level spike (no healthy anchor,
     so the expected-point corrector cannot suppress it) emits far fewer
     anomaly rows with run-length suppression than without."""
-    import pandas as pd
-
-    from random_cut_forest_by_aws_spark.operators.drift import (
-        DriftConfig, _make_drift_fn,
-    )
+    from random_cut_forest_by_aws_spark.operators.drift import DriftConfig, drift_group
 
     rng = np.random.default_rng(2)
     X = rng.normal(0, 1, size=(4000, 3))
     X[2000:2030] += 12.0  # all dims: a cascade the corrector cannot explain
-    pdf = pd.DataFrame({"source": "s", "bucket": 0, "seq": np.arange(4000),
-                        "features": [r for r in X]})
     kw = dict(num_trees=15, sample_size=64, chunk_size=512, buckets=1,
-              window=4000, use_corrector=True, transform="none",
-              normalize=False)
+              window=4000, use_corrector=True, transform="none")
 
     def in_spike_anoms(run_sup):
-        fn = _make_drift_fn(["source", "bucket"], "seq", "features",
-                            DriftConfig(**kw, run_length_suppression=run_sup))
-        out = fn(("s", 0), pdf)
-        an = out[out.row_kind == "anomaly"]
-        return len(an[(an.seq >= 2000) & (an.seq < 2035)])
+        out = drift_group(("s", 0), np.arange(4000), X,
+                          DriftConfig(**kw, run_length_suppression=run_sup))
+        anom = np.array(out["row_kind"]) == "anomaly"
+        seq = out["seq"][anom]
+        return int(((seq >= 2000) & (seq < 2035)).sum())
 
     without = in_spike_anoms(False)
     with_sup = in_spike_anoms(True)

@@ -7,20 +7,12 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from random_cut_forest_by_aws_spark.operators.drift import (
-    DriftConfig,
-    _make_drift_fn,
-)
+from random_cut_forest_by_aws_spark.operators.drift import DriftConfig, drift_group
 
 
 def _run(cfg, X, seqs=None, key=("s", 0)):
     seqs = np.arange(len(X)) if seqs is None else np.asarray(seqs)
-    pdf = pd.DataFrame(
-        {"source": key[0], "bucket": key[1], "seq": seqs,
-         "features": [np.asarray(r, np.float64) for r in X]}
-    )
-    fn = _make_drift_fn(["source", "bucket"], "seq", "features", cfg)
-    return fn(key, pdf)
+    return pd.DataFrame(drift_group(key, seqs, np.asarray(X, np.float64), cfg))
 
 
 BASE_KW = dict(num_trees=10, sample_size=32, chunk_size=256, buckets=1,
@@ -36,9 +28,8 @@ def test_weighted_transform_equals_prescaled_input():
     rng = np.random.default_rng(5)
     X = rng.normal(0, 1, size=(2000, 3))
     w = (2.0, 0.5, 1.0)
-    out_w = _run(DriftConfig(**BASE_KW, transform="weighted", transform_weights=w,
-                             normalize=False), X)
-    out_pre = _run(DriftConfig(**BASE_KW, transform="none", normalize=False),
+    out_w = _run(DriftConfig(**BASE_KW, transform="weighted", transform_weights=w), X)
+    out_pre = _run(DriftConfig(**BASE_KW, transform="none"),
                    X * np.asarray(w))
     sw = out_w[out_w.row_kind == "summary"].iloc[0]
     sp = out_pre[out_pre.row_kind == "summary"].iloc[0]
@@ -359,8 +350,7 @@ def test_distance_scoring_mode_flags_outlier():
     rng = np.random.default_rng(9)
     X = rng.normal(0, 1, size=(4000, 3))
     X[3500] = [30.0, 30.0, 30.0]
-    cfg = DriftConfig(**BASE_KW, scoring="distance", transform="none",
-                      normalize=False)
+    cfg = DriftConfig(**BASE_KW, scoring="distance", transform="none")
     out = _run(cfg, X)
     an = out[out.row_kind == "anomaly"]
     assert 3500 in set(an.seq)
@@ -377,7 +367,7 @@ def test_multi_mode_veto_reduces_false_positives():
     spikes = [4200, 4600]
     for sp in spikes:
         X[sp] = [25.0, -25.0, 25.0]
-    base = dict(**BASE_KW, transform="none", normalize=False)
+    base = dict(**BASE_KW, transform="none")
     out_plain = _run(DriftConfig(**base), X)
     out_multi = _run(DriftConfig(**base, scoring="multi_mode"), X)
     a_plain = set(out_plain[out_plain.row_kind == "anomaly"].seq)
@@ -393,7 +383,7 @@ def test_multi_mode_checkpoint_resume(tmp_path):
     rng = np.random.default_rng(13)
     X = rng.normal(0, 1, size=(3000, 2))
     X[2500] = [20.0, -20.0]
-    kw = dict(**BASE_KW, transform="none", normalize=False,
+    kw = dict(**BASE_KW, transform="none",
               scoring="multi_mode")
     full = _run(DriftConfig(**kw), X)
     cfg_ck = DriftConfig(**kw, checkpoint_dir=str(tmp_path))
@@ -421,7 +411,7 @@ def test_multi_mode_recall_re_elevates():
     n = 3000
     X = rng.normal(0, 0.2, size=(n, 2))
     X += np.where(np.arange(n) % 2 == 0, 1.0, -1.0)[:, None] * 10.0
-    base = dict(**BASE_KW, transform="none", normalize=False)
+    base = dict(**BASE_KW, transform="none")
     out_plain = _run(DriftConfig(**base), X)
     out_recall = _run(DriftConfig(**base, scoring="multi_mode_recall"), X)
     a_plain = set(out_plain[out_plain.row_kind == "anomaly"].seq)
@@ -444,7 +434,7 @@ def test_multi_mode_recall_checkpoint_resume(tmp_path):
     n = 3000
     X = rng.normal(0, 0.2, size=(n, 2))
     X += np.where(np.arange(n) % 2 == 0, 1.0, -1.0)[:, None] * 10.0
-    kw = dict(**BASE_KW, transform="none", normalize=False,
+    kw = dict(**BASE_KW, transform="none",
               scoring="multi_mode_recall")
     full = _run(DriftConfig(**kw), X)
     cfg_ck = DriftConfig(**kw, checkpoint_dir=str(tmp_path))

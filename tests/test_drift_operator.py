@@ -11,8 +11,13 @@ from random_cut_forest_by_aws_spark.core.thresholder import Deviation
 from random_cut_forest_by_aws_spark.functions import token_features
 from random_cut_forest_by_aws_spark.operators.drift import (
     DriftConfig,
+    _checkpoint_path,
+    _feature_matrix,
+    _load_group_state,
     _Normalizer,
+    _write_group_state,
     drift_anomalies,
+    drift_group,
     drift_scores,
     drift_verdicts,
 )
@@ -248,3 +253,76 @@ def test_drift_lineage_bucket_grain_consistent_with_verdicts(feat_df):
     # config fingerprint is present and constant per run
     assert lin["config_digest"].nunique() == 1
     raw.unpersist()
+
+
+@pytest.mark.parametrize("bad, message", [
+    ("CAST(NULL AS array<double>)", "NULL feature array"),
+    ("array(1.0D, 2.0D, 3.0D)", "feature array of length 3"),
+    ("array(1.0D)", "feature array of length 1"),
+])
+def test_drift_rejects_null_and_wrong_width_feature_arrays(spark, bad, message):
+    """One NULL, longer or shorter feature array fails the run with a
+    ValueError naming the group and the order_col value — never a
+    truncated row, an anonymous index error or a NaN point."""
+    from pyspark.sql import functions as F
+
+    ok = F.array(F.col("id").cast("double"), F.lit(1.0))
+    df = spark.range(200).select(
+        F.lit("s").alias("source"), F.col("id").alias("seq"),
+        F.when(F.col("id") == 57, F.expr(bad)).otherwise(ok).alias("features"),
+    )
+    match = rf"ValueError: drift_scores: {message} in group source='s', bucket=0 at seq=57"
+    with pytest.raises(Exception, match=match):
+        drift_scores(df, cfg=_cfg(num_trees=5, sample_size=16)).collect()
+
+
+def test_feature_matrix_reads_flat_values_and_keeps_null_elements():
+    """The Arrow ingest: list<float> chunks become one float64 matrix; a
+    NULL element inside an array stays NaN."""
+    import pyarrow as pa
+
+    col = pa.chunked_array([pa.array([[1.5, None], [2.0, 3.0]], pa.list_(pa.float32())),
+                            pa.array([[4.0, 5.0]], pa.list_(pa.float32()))])
+    X = _feature_matrix(col, np.array([3, 1, 2]), "g", "seq")
+    assert X.dtype == np.float64
+    np.testing.assert_array_equal(X, [[1.5, np.nan], [2.0, 3.0], [4.0, 5.0]])
+    short = pa.chunked_array([pa.array([[1.0, 2.0], [3.0], [4.0, 5.0]])])
+    with pytest.raises(ValueError, match="length 1 in group g at seq=2; the group's first row has 2"):
+        _feature_matrix(short, np.array([1, 2, 3]), "g", "seq")
+
+
+def test_checkpoint_writers_do_not_share_a_temp_file(tmp_path, monkeypatch):
+    """Two attempts of one task (a speculative copy, a zombie retry)
+    writing one group checkpoint at once: each fills its own temp file,
+    both publish, and a complete state remains with no stray temp file."""
+    import os
+    import threading
+
+    cfg = _cfg(num_trees=5, sample_size=16, checkpoint_dir=str(tmp_path))
+    drift_group(("s", 0), np.arange(300), np.random.default_rng(0).normal(size=(300, 2)), cfg)
+    with np.load(_checkpoint_path(str(tmp_path), ("s", 0))) as z:
+        state = {k: z[k] for k in z.files}
+    target = str(tmp_path / "dst" / "group.npz")
+    both_written, real_replace, errors = threading.Barrier(2), os.replace, []
+
+    def replace_after_both_wrote(src, dst):
+        both_written.wait(timeout=30)
+        real_replace(src, dst)
+
+    def writer():
+        try:
+            _write_group_state(target, state)
+        except Exception as e:  # asserted below
+            errors.append(e)
+
+    monkeypatch.setattr(os, "replace", replace_after_both_wrote)
+    threads = [threading.Thread(target=writer) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(60)
+        assert not t.is_alive()
+    assert errors == [] and os.listdir(tmp_path / "dst") == ["group.npz"]
+    _load_group_state(target)
+    with np.load(target) as z:
+        assert all(np.array_equal(z[k], v) for k, v in state.items())

@@ -6,17 +6,12 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from random_cut_forest_by_aws_spark.operators.drift import DriftConfig, _make_drift_fn
+from random_cut_forest_by_aws_spark.operators.drift import DriftConfig, drift_group
 
 
 def _run(cfg, X, seqs=None, key=("s", 0)):
-    seqs = np.arange(len(X)) if seqs is None else seqs
-    pdf = pd.DataFrame(
-        {"source": key[0], "bucket": key[1], "seq": seqs,
-         "features": [np.asarray(r, np.float64) for r in X]}
-    )
-    fn = _make_drift_fn(["source", "bucket"], "seq", "features", cfg)
-    return fn(key, pdf)
+    seqs = np.arange(len(X)) if seqs is None else np.asarray(seqs)
+    return pd.DataFrame(drift_group(key, seqs, np.asarray(X, np.float64), cfg))
 
 
 def _level_shift_series(n=8000, shift_at=4000, delta=5.0, seed=0):

@@ -4,7 +4,6 @@ forest state carried in GroupState (availableNow trigger + memory sink)."""
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
 from random_cut_forest_by_aws_spark.functions import token_features
 from random_cut_forest_by_aws_spark.operators.drift import DriftConfig
@@ -12,8 +11,7 @@ from random_cut_forest_by_aws_spark.sources import sequences
 from random_cut_forest_by_aws_spark.streaming import streaming_drift_scores
 
 
-@pytest.mark.timeout(600)
-def test_streaming_drift_scores(spark, tmp_path):
+def test_streaming_drift_scores(spark, tmp_path, finish_stream):
     src_dir = str(tmp_path / "stream_src")
     ckpt = str(tmp_path / "stream_ckpt")
     df = sequences(spark, 6000, seed=42, violations=False, drift=True)
@@ -32,7 +30,7 @@ def test_streaming_drift_scores(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    finish_stream(q)
     res = spark.sql("SELECT * FROM drift_stream_out").toPandas()
     assert len(res) > 0
     assert {"source", "bucket", "seq", "score", "threshold", "grade"} <= set(res.columns)
@@ -43,8 +41,7 @@ def test_streaming_drift_scores(spark, tmp_path):
     assert np.isfinite(web["score"]).all()
 
 
-@pytest.mark.timeout(600)
-def test_streaming_drift_subtract_ma_transform(spark, tmp_path):
+def test_streaming_drift_subtract_ma_transform(spark, tmp_path, finish_stream):
     """Streaming supports the full TransformMethod set (parity with the
     batch operator): SUBTRACT_MA carries its discounted mean (and the
     difference transform's tlast) across micro-batches in GroupState."""
@@ -63,15 +60,14 @@ def test_streaming_drift_subtract_ma_transform(spark, tmp_path):
         out.writeStream.format("memory").queryName("drift_stream_sub")
         .option("checkpointLocation", ckpt).trigger(availableNow=True).start()
     )
-    q.awaitTermination(300)
+    finish_stream(q)
     res = spark.sql("SELECT * FROM drift_stream_sub").toPandas()
     assert len(res) > 1000
     assert np.isfinite(res["score"]).all()
     assert (res["score"] >= 0).all()
 
 
-@pytest.mark.timeout(600)
-def test_streaming_drift_shingled_matches_batch(spark, tmp_path):
+def test_streaming_drift_shingled_matches_batch(spark, tmp_path, finish_stream):
     """shingle_size > 1 in streaming: the transformed-row tail rides
     GroupState, so windows spanning micro-batch boundaries score exactly
     like the batch operator over the same unbroken stream."""
@@ -116,15 +112,12 @@ def test_streaming_drift_shingled_matches_batch(spark, tmp_path):
         out.writeStream.format("memory").queryName("drift_stream_sh")
         .option("checkpointLocation", ckpt).trigger(availableNow=True).start()
     )
-    q.awaitTermination(300)
+    finish_stream(q)
     res = spark.sql("SELECT * FROM drift_stream_sh").toPandas()
     # batch reference over the same rows, same config
-    from random_cut_forest_by_aws_spark.operators.drift import _make_drift_fn
+    from random_cut_forest_by_aws_spark.operators.drift import drift_group
 
-    fn = _make_drift_fn(["source", "bucket"], "seq", "features", cfg)
-    bpdf = pdf.copy()
-    bpdf["bucket"] = 0
-    bref = fn(("s", 0), bpdf)
+    bref = pd.DataFrame(drift_group(("s", 0), np.arange(n), vals, cfg))
     # streaming emits per-row descriptors; compare score series
     got = res.sort_values("seq")[["seq", "score"]].reset_index(drop=True)
     s = bref[bref.row_kind == "summary"].iloc[0]

@@ -35,7 +35,6 @@ import os
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
-import pytest
 
 from random_cut_forest_by_aws_spark.streaming.window_stream import (
     streaming_windowed_agg,
@@ -69,8 +68,7 @@ def _write_batches(src_dir: str, batches: list[list[str]]) -> None:
         os.utime(path, (base_mtime + i * 10, base_mtime + i * 10))
 
 
-@pytest.mark.timeout(600)
-def test_streaming_tumbling_watermark_late_rules(spark, tmp_path):
+def test_streaming_tumbling_watermark_late_rules(spark, tmp_path, finish_stream):
     src_dir = str(tmp_path / "win_src")
     ckpt = str(tmp_path / "win_ckpt")
     os.makedirs(src_dir, exist_ok=True)
@@ -100,7 +98,7 @@ def test_streaming_tumbling_watermark_late_rules(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    finish_stream(q)
     dropped = sum(
         (p["stateOperators"][0].get("numRowsDroppedByWatermark", 0)
          if p["stateOperators"] else 0)
@@ -122,8 +120,7 @@ def test_streaming_tumbling_watermark_late_rules(spark, tmp_path):
     assert (res["event_type"] == "a").all()
 
 
-@pytest.mark.timeout(600)
-def test_streaming_hopping_watermark(spark, tmp_path):
+def test_streaming_hopping_watermark(spark, tmp_path, finish_stream):
     """Hopping windows (1h / slide 30m) under the same watermark machinery:
     every finalized on-time event contributes to exactly 2 windows."""
     src_dir = str(tmp_path / "hop_src")
@@ -150,7 +147,7 @@ def test_streaming_hopping_watermark(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    finish_stream(q)
     res = spark.sql("SELECT * FROM hop_stream_out").toPandas()
     got = dict(zip(res["ws"].astype(int), res["n_events"].astype(int)))
     # 10:15 → windows starting 09:30, 10:00; 10:45 → 10:00, 10:30.
